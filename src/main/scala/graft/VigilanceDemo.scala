@@ -2,7 +2,6 @@ package graft
 
 import graft.checks.Checks
 import graft.models.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /**
  * CLI entry for the vigilance pipeline: ingest a MAUDE NDJSON landing dir +
@@ -10,18 +9,15 @@ import org.apache.spark.sql.SparkSession
  * reference's schema tests, and print the strongest early signals.
  *
  * Usage: runMain graft.VigilanceDemo <landingDir> <seedCsv> [martsOutDir]
+ * (local cores from `SPARK_GRAFT_CPUS`, default all of them)
  */
 object VigilanceDemo {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: VigilanceDemo <landingDir> <seedCsv> [martsOutDir]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("vigilance")
-      .getOrCreate()
+    val spark = sys.env.get("SPARK_GRAFT_CPUS") match {
+      case Some(cores) => Graft.session(cores.toInt, "vigilance")
+      case None        => Graft.session(appName = "vigilance")
+    }
     spark.sparkContext.setLogLevel("WARN")
 
     val models = Pipeline.run(spark, args(0), args(1), args.lift(2))

@@ -9,13 +9,17 @@ import org.apache.spark.sql.functions._
  * DAG runner for the vigilance models (reference `dbt run` semantics,
  * SURVEY.md §3 E1): builds the models in topological order —
  * seed → stg_maude → fact_adverse_events → ae_counts_q →
- * v_ae_early_signals — with the reference's per-layer materialization:
- * staging and the signals view stay lazy (temp views, dbt_project.yml:10-12)
- * while marts are persisted (dbt_project.yml:13-15).
+ * v_ae_early_signals. Staging and the signals view are views
+ * (dbt_project.yml:10-12), the marts are tables (dbt_project.yml:13-15).
  *
- * Each stage is tagged via the job group (the QUERY_TAG / FinOps analog,
- * README.md:128-133). Mart writes are partitioned by receive-year so
- * time-scoped reads prune at 100 TB.
+ * With `martsDir`, [[run]] materializes like `dbt run`: each mart is
+ * written, and the model downstream of it reads the persisted mart (dbt
+ * `ref()` semantics), so one refresh parses the landing once. Without
+ * `martsDir` the whole DAG stays lazy.
+ *
+ * Each mart write is tagged via the job group (the QUERY_TAG / FinOps
+ * analog, README.md:128-133). The fact mart is partitioned by
+ * receive-year so time-scoped reads prune at 100 TB.
  */
 object Pipeline {
 
@@ -34,36 +38,44 @@ object Pipeline {
     Models(stg, fact, counts, sig)
   }
 
-  /** Run end-to-end from paths; optionally persist marts under `martsDir`
-    * (parquet, facts partitioned by receive-year). Registers every model
-    * as a temp view (stg/view semantics) and returns the DAG. */
+  private val JobGroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+  /** Run end-to-end from paths. With `martsDir`, write the marts there
+    * (parquet, facts partitioned by receive-year) and feed each
+    * downstream model from the mart it reads; without it, return the
+    * lazy DAG. Registers every model as a temp view and returns them. */
   def run(spark: SparkSession, landingPath: String, seedPath: String,
           martsDir: Option[String] = None): Models = {
+    val sc = spark.sparkContext
     def tagged[T](tag: String)(body: => T): T = {
-      spark.sparkContext.setJobGroup(tag, s"vigilance:$tag", interruptOnCancel = false)
-      try body finally spark.sparkContext.clearJobGroup()
+      val saved = JobGroupProps.map(k => k -> sc.getLocalProperty(k))
+      sc.setJobGroup(tag, s"vigilance:$tag", interruptOnCancel = false)
+      try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    // Write a mart, then read it back with the schema it was written
+    // with: no schema-inference job.
+    def persist(tag: String, df: DataFrame, path: String, partitionBy: String*): DataFrame = {
+      tagged(tag)(df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(path))
+      spark.read.schema(df.schema).parquet(path)
     }
 
-    val models = build(
+    val lazyModels = build(
       MaudeIngest.batch(spark, landingPath),
       MaudeIngest.manufacturerSeed(spark, seedPath))
+
+    val models = martsDir.fold(lazyModels) { dir =>
+      val fact = persist("fact_adverse_events",
+        lazyModels.factAdverseEvents.withColumn("yyyy", year(col("date_received"))),
+        s"$dir/fact_adverse_events", "yyyy").drop("yyyy")
+      val counts = persist("ae_counts_q", AeCountsQ(fact), s"$dir/ae_counts_q")
+      Models(lazyModels.stgMaude, fact, counts, VAeEarlySignals(counts))
+    }
 
     models.stgMaude.createOrReplaceTempView("stg_maude")
     models.factAdverseEvents.createOrReplaceTempView("fact_adverse_events")
     models.aeCountsQ.createOrReplaceTempView("ae_counts_q")
     models.vAeEarlySignals.createOrReplaceTempView("v_ae_early_signals")
-
-    martsDir.foreach { dir =>
-      tagged("fact_adverse_events") {
-        models.factAdverseEvents
-          .withColumn("yyyy", year(col("date_received")))
-          .write.mode("overwrite").partitionBy("yyyy")
-          .parquet(s"$dir/fact_adverse_events")
-      }
-      tagged("ae_counts_q") {
-        models.aeCountsQ.write.mode("overwrite").parquet(s"$dir/ae_counts_q")
-      }
-    }
     models
   }
 

@@ -110,6 +110,52 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"))
   }
 
+  test("vigilance refresh with marts parses the landing once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    object Walk extends AdaptiveSparkPlanHelper {
+      def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+        collectWithSubqueries(p) { case f: FileSourceScanExec => f }
+      def writesTo(p: SparkPlan): Seq[String] = collect(p) {
+        case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+          c.outputPath.getName
+      }
+    }
+    // a session of its own: its listener sees only this test's actions
+    val s = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val base = java.nio.file.Files.createTempDirectory("maude_once")
+    val (landing, seed) = graft.models.MaudeFixture.write(base)
+    graft.models.Pipeline.run(s, landing, seed, Some(s"$base/marts"))
+      .vAeEarlySignals.collect()
+    // listener events arrive in order: once the collect's is in, all are
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!seen.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    val plans = seen.asScala.toSeq
+    val json = plans.flatMap(p => Walk.scans(p._2))
+      .count(_.relation.fileFormat.isInstanceOf[JsonFileFormat])
+    assert(json === 1, plans.map(_._2).mkString("\n"))
+    val downstream = plans.filter { case (f, p) =>
+      f == "collect" || Walk.writesTo(p).contains("ae_counts_q") }.map(_._2)
+    assert(downstream.size === 2, plans.map(_._1))
+    downstream.foreach { p =>
+      val formats = Walk.scans(p).map(_.relation.fileFormat)
+      assert(formats.nonEmpty && formats.forall(_.isInstanceOf[ParquetFileFormat]), p)
+    }
+  }
+
   test("fingerprint kernels are scan-side projections: no shuffle before the pair join") {
     // The xxhash64 scale-primary paths: fingerprints/signatures come
     // straight out of the scan; the only exchanges serve the bucket

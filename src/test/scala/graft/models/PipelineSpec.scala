@@ -2,6 +2,7 @@ package graft.models
 
 import graft.SparkSpec
 import graft.sources.MaudeIngest
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 import java.security.MessageDigest
 
@@ -129,6 +130,34 @@ class PipelineSpec extends SparkSpec {
       assert(r.isNullAt(r.fieldIndex("std_4")))
       assert(r.isNullAt(r.fieldIndex("z_score")))
     }
+  }
+
+  test("table-backed models from run(martsDir) are row-identical to the lazy DAG") {
+    val dir = Files.createTempDirectory("marts_equiv").toString
+    val tables = Pipeline.run(spark, landing, seed, Some(dir))
+    def same(name: String, a: DataFrame, b: DataFrame): Unit = {
+      assert(a.schema.map(f => f.name -> f.dataType) === b.schema.map(f => f.name -> f.dataType),
+        s"$name: columns differ")
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$name: rows differ")
+    }
+    same("fact_adverse_events", tables.factAdverseEvents, models.factAdverseEvents)
+    same("ae_counts_q", tables.aeCountsQ, models.aeCountsQ)
+    same("v_ae_early_signals", tables.vAeEarlySignals, models.vAeEarlySignals)
+    // the NULL-date fact rows round-trip through the default partition
+    assert(Files.isDirectory(java.nio.file.Paths.get(
+      dir, "fact_adverse_events", "yyyy=__HIVE_DEFAULT_PARTITION__")))
+    assert(tables.factAdverseEvents.filter("date_received IS NULL").count() === 3)
+    val results = graft.checks.Checks.run(Pipeline.checks(tables))
+    assert(results.filter(_._2 > 0) === Map("fact_date_received_not_null" -> 3L))
+  }
+
+  test("Pipeline.run restores the caller's job group after its tagged mart writes") {
+    val dir = Files.createTempDirectory("marts_group").toString
+    val (_, cost) = graft.Metrics.measure(spark, "pipeline-caller") {
+      Pipeline.run(spark, landing, seed, Some(dir)).vAeEarlySignals.collect()
+    }
+    // the collect after run must still run under the caller's group
+    assert(cost.jobs >= 1L, s"the signals collect escaped the caller's job group: $cost")
   }
 
   test("reference dbt tests: green except the declared-but-unenforced date contract") {
